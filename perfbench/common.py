@@ -1,5 +1,5 @@
 """Process set-up shared by every workload: paths, environment, Spark
-session set-up (timed several times), memory read-out and statistics."""
+session set-up (timed from process start), memory read-out and statistics."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH_DIR)
 CORES = min(4, os.cpu_count() or 1)
 DRIVER_MEM = "3g"
-SETUP_REPS = 3
 
 
 def process_start_time() -> float:
@@ -73,23 +72,14 @@ def _warmup(spark, work: str) -> None:
 
 
 def setup_spark(work: str, t_proc0: float):
-    """Set the session up SETUP_REPS times. The first set-up runs from
-    process start (interpreter, imports, JVM launch); the others stop the
-    session and build it again in the same JVM. Each ends when the
-    warm-up job has finished."""
-    reps = []
-    spark = None
-    for i in range(SETUP_REPS):
-        t0 = time.time()
-        if spark is not None:
-            spark.stop()
-        spark = _session(work)
-        t1 = time.time()
-        _warmup(spark, work)
-        t2 = time.time()
-        start = t_proc0 if i == 0 else t0
-        reps.append({"total_s": t2 - start, "start_s": t1 - start, "warmup_s": t2 - t1})
-    return spark, reps
+    """Start the session and run the warm-up job. The set-up is timed
+    from process start, so it covers interpreter start, imports, the JVM
+    launch with its driver options, the session and the warm-up job."""
+    spark = _session(work)
+    t1 = time.time()
+    _warmup(spark, work)
+    t2 = time.time()
+    return spark, {"total_s": t2 - t_proc0, "start_s": t1 - t_proc0, "warmup_s": t2 - t1}
 
 
 def shutdown(spark) -> None:

@@ -187,7 +187,7 @@ def query_tables(seed: int, out_dir: str, sf: float = 0.1) -> dict[str, int]:
 
 # -- dedup_hygiene -----------------------------------------------------------
 
-CHAIN_EDGES = 4
+CHAIN_EDGES = 2
 
 
 def _words(rng: np.random.Generator, n: int) -> list[str]:

@@ -69,7 +69,7 @@ def run_one(args, spec) -> dict:
     common.prepare_env(work)
     spark = None
     try:
-        spark, reps = common.setup_spark(work, t_proc0)
+        spark, setup = common.setup_spark(work, t_proc0)
         import tracing
         import workloads
 
@@ -125,6 +125,8 @@ def run_one(args, spec) -> dict:
         phases["checks"] = sum(p.check_s for p in passes)
         print(f"[{args.workload}] phases: "
               + ", ".join(f"{k} {v:.1f}s" for k, v in phases.items()), flush=True)
+        print(f"[{args.workload}] pass walls: "
+              + ", ".join(f"{p.wall_s:.3f}s" for p in passes), flush=True)
         per_op: dict[str, list[float]] = {}
         for p in passes:
             for o in p.ops:
@@ -153,7 +155,7 @@ def run_one(args, spec) -> dict:
         traced = [p for p in passes if getattr(p, "traced", False)]
         rss = common.peak_rss_mb(spark)
         e2e = {
-            "setup_s": common.median([r["total_s"] for r in reps]),
+            "setup_s": setup["total_s"],
             "pass_s": common.median([p.wall_s for p in untraced]),
             "op_p50_ms": 1e3 * common.median([
                 common.median([o["s"] for p in untraced for o in p.ops if o["name"] == n])
@@ -162,8 +164,7 @@ def run_one(args, spec) -> dict:
             "peak_rss_mb": rss,
         }
         _say(args.workload, "setup_s", e2e["setup_s"], "s",
-             f"median of {len(reps)} set-ups; first from process start "
-             f"{reps[0]['total_s']:.2f} s")
+             "process start to session up and warm-up job done")
         _say(args.workload, "pass_s", e2e["pass_s"], "s", f"median of {len(untraced)} passes")
         _say(args.workload, "pass_cpu_s", e2e["pass_cpu_s"], "s", "CPU of driver, JVM and workers")
         _say(args.workload, "op_p50_ms", e2e["op_p50_ms"], "ms",
@@ -177,7 +178,7 @@ def run_one(args, spec) -> dict:
              f"{failed} of {attempted} operations")
 
         if args.trace:
-            metrics = _layers(args, spec, ctx, w, reps, passes, untraced, traced)
+            metrics = _layers(args, spec, ctx, w, setup, untraced, traced)
         else:
             metrics = {m["name"]: {"value": e2e[m["name"]], "unit": m["unit"]}
                        for m in spec["end_to_end"]}
@@ -193,7 +194,7 @@ def run_one(args, spec) -> dict:
         common.rmtree(work)
 
 
-def _layers(args, spec, ctx, w, reps, passes, untraced, traced) -> dict:
+def _layers(args, spec, ctx, w, setup, untraced, traced) -> dict:
     import common
     import tracing
 
@@ -217,8 +218,8 @@ def _layers(args, spec, ctx, w, reps, passes, untraced, traced) -> dict:
         m.update(w.layers(ctx, tree, p))
         rows.append(m)
     values = {
-        "session.start_s": common.median([r["start_s"] for r in reps]),
-        "session.warmup_s": common.median([r["warmup_s"] for r in reps]),
+        "session.start_s": setup["start_s"],
+        "session.warmup_s": setup["warmup_s"],
     }
     if traced and untraced:
         values["trace.overhead_s"] = (common.median([p.wall_s for p in traced])
@@ -257,8 +258,10 @@ def _layers(args, spec, ctx, w, reps, passes, untraced, traced) -> dict:
 
 
 def run_all(args, spec) -> int:
-    """Every workload of BENCHMARK.json, each in its own process."""
+    """Every workload of BENCHMARK.json, each in its own process. Exits
+    non-zero if any workload's result is not correct."""
     failed = attempted = 0
+    all_correct = True
     for wl in spec["workloads"]:
         cmd = [sys.executable, os.path.abspath(__file__), "--workload", wl["name"],
                "--seed", str(args.seed), "--seconds", str(args.seconds),
@@ -274,13 +277,14 @@ def run_all(args, spec) -> int:
             print(f"[{wl['name']}] no result (exit {proc.returncode}): "
                   f"{proc.stderr.strip()[-500:]}")
             return 1
+        all_correct = all_correct and res["correct"]
         attempted += res["attempted"]
         failed += res["failed"]
         print(f"[{wl['name']}] correct={res['correct']} attempted={res['attempted']} "
               f"failed={res['failed']}")
     print(f"[all] failed_op_share = {failed / max(attempted, 1):.4f} ratio "
           f"({failed} of {attempted} operations)")
-    return 0
+    return 0 if all_correct else 1
 
 
 def main(argv=None) -> int:
