@@ -427,6 +427,12 @@ def q_text_repetition(spark, sf):
     )
 
 
+# "newline after every 5th word" for q_line_dups and its oracle. An
+# explicit whitespace class, because Java's \s matches \x0B and RE2's
+# does not: the same pattern means the same thing in both engines.
+_LINE_BREAK_RE = r"((?:[^ \t\n\r\f]+[ \t\n\r\f]+){4}[^ \t\n\r\f]+)[ \t\n\r\f]+"
+
+
 def q_line_dups(spark, sf):
     # Gopher duplicate-line signals. The fixture docs are single-line, so
     # the query synthesizes deterministic multi-line text (newline after
@@ -436,7 +442,7 @@ def q_line_dups(spark, sf):
     from qsvspark.functions import add_line_dup_signals
 
     docs = _t(spark, sf, "documents")
-    mt = F.regexp_replace(F.col("text"), r"((?:\S+\s+){4}\S+)\s+", "$1\n")
+    mt = F.regexp_replace(F.col("text"), _LINE_BREAK_RE, "$1\n")
     withdup = F.when(
         F.col("doc_id") % 3 == 0,
         F.concat(mt, F.lit("\n"), F.substring_index(mt, "\n", 1)),
@@ -1338,7 +1344,7 @@ def oracle_sql() -> dict[str, str]:
         # first line), then replicates add_line_dup_signals with list ops
         "line_dups": (
             r"WITH m AS (SELECT doc_id, regexp_replace(text,"
-            r" '((?:\S+\s+){4}\S+)\s+', '\1' || chr(10), 'g') AS mt"
+            f" '{_LINE_BREAK_RE}', '\\1' || chr(10), 'g') AS mt"
             r" FROM documents),"
             r" s AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0"
             r" THEN mt || chr(10) || string_split(mt, chr(10))[1]"

@@ -24,7 +24,7 @@ Delivery is additionally kill-proof (round 4's driver artifact was
 rc=124/parsed:null): the summary line is (re)printed after EVERY
 completed section with ``"partial": true``, SIGTERM/SIGINT flush the
 current state before exiting, and $QSVSPARK_BENCH_TOTAL_BUDGET
-(default 6600 s, 0 = off) is a total-run deadline the scaling section
+(default 3200 s, 0 = off) is a total-run deadline the scaling section
 and its clean-pair hunt respect with margin — so a consumer that takes
 the last parseable stdout line always gets the most complete state.
 
@@ -91,9 +91,10 @@ SCALING_BUDGET = int(os.environ.get("QSVSPARK_BENCH_SCALING_BUDGET", "5400"))
 # summary line BEFORE the driver's outer timeout kills it — round 4's
 # recorded artifact was rc=124/parsed:null because the hunt slept
 # through 14 degraded host phases and the summary never printed. The
-# budget is measured from process start; 0 disables it.
+# budget is measured from process start and sits below the outer
+# 3,600 s kill; 0 disables it.
 _RUN_T0 = time.time()
-TOTAL_BUDGET = int(os.environ.get("QSVSPARK_BENCH_TOTAL_BUDGET", "6600"))
+TOTAL_BUDGET = int(os.environ.get("QSVSPARK_BENCH_TOTAL_BUDGET", "3200"))
 
 
 def _total_deadline() -> float:
@@ -947,7 +948,7 @@ def _run_sf1(spark, queries: dict, sf01_steady: dict) -> dict:
 
 
 def _emit_artifacts(
-    summary: dict, detail: dict, detail_path: str, max_line: int = 2800
+    summary: dict, detail: dict, detail_path: str, max_line: int = 1500
 ) -> str:
     """Stamp BOTH artifacts with one shared run id and write the detail
     file atomically (tmp + rename), so BENCH_r*.json and
@@ -968,15 +969,21 @@ def _emit_artifacts(
     except OSError as e:  # noqa: PERF203 — the summary line must still print
         summary.setdefault("errors_count", 0)
         summary["detail_write_error"] = repr(e)[:200]
-    # belt-and-braces: never outgrow the driver's tail-capture window.
-    # Drop order keeps the round-4 evidence sections (sf1, skew,
-    # extensions_steady) over the per-query cold timings, which the
-    # detail file always carries.
+    # never outgrow the consumer's 2,000-byte tail-capture window. The
+    # per-query maps go first (the detail file always carries them),
+    # then the evidence sections; if even that is too long, only the
+    # scalar headline fields stay.
     line = json.dumps(summary)
-    for drop in ("queries", "extensions", "extensions_steady", "skew", "sf1"):
+    for drop in ("queries", "extensions", "extensions_steady",
+                 "section_probes", "skew", "sf1", "pipeline", "scaling"):
         if len(line) <= max_line:
             break
         summary.pop(drop, None)
+        line = json.dumps(summary)
+    if len(line) > max_line:
+        summary = {k: v for k, v in summary.items()
+                   if not isinstance(v, (dict, list))}
+        summary["truncated"] = True
         line = json.dumps(summary)
     return line
 
@@ -1018,6 +1025,8 @@ def _assemble(state: dict) -> tuple[dict, dict]:
     }
     if query_errors:
         detail["errors"] = query_errors
+    if state.get("killed_by_signal"):
+        detail["killed_by_signal"] = state["killed_by_signal"]
 
     scaling_summary = None
     if scaling:
@@ -1090,6 +1099,7 @@ def _assemble(state: dict) -> tuple[dict, dict]:
         "sf1": sf1_summary,
         "scaling": scaling_summary,
         "errors_count": len(query_errors),
+        "killed_by_signal": state.get("killed_by_signal"),
         "detail_file": "BENCH_DETAIL.json",
         "run_id": state["run_id"],
         "sections_done": list(state.get("sections_done") or []),
@@ -1119,10 +1129,12 @@ def _install_signal_flush(state: dict, detail_path: str):
 
     def handler(sig, frame):  # noqa: ARG001
         try:
-            state.setdefault("query_errors", {})["__signal__"] = (
-                f"killed by signal {sig} after "
-                f"{round(time.time() - _RUN_T0, 1)}s"
-            )
+            # a kill is not a query error: it gets its own field, and
+            # errors_count keeps counting only failed sections/queries
+            state["killed_by_signal"] = {
+                "signal": sig,
+                "after_s": round(time.time() - _RUN_T0, 1),
+            }
             _flush_state(state, detail_path, final=False)
         finally:
             os._exit(128 + sig)

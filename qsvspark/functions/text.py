@@ -244,7 +244,8 @@ def add_line_dup_signals(
     "fraction of characters in duplicate lines"). Complements
     add_repetition_signals (word/bigram modes) with the line axis.
 
-    Lines are ``sep``-separated, trimmed, empties dropped. Emitted:
+    Lines are ``sep``-separated (a literal string, not a regex),
+    trimmed, empties dropped. Emitted:
 
     * ``total_lines`` / ``distinct_lines`` — longs,
     * ``dup_line_chars`` — characters in repeated occurrences beyond
@@ -255,7 +256,10 @@ def add_line_dup_signals(
     Row-local codegen: split/filter/array_distinct plus two aggregate
     folds — no explode, no shuffle; at 100 TB this runs at scan speed
     alongside the other quality columns."""
-    raw = F.split(F.col(text_col), sep)
+    # F.split takes a Java regex: quote sep the way Pattern.quote does,
+    # so '|' or '.' split on themselves, not between every character
+    quoted = "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+    raw = F.split(F.col(text_col), quoted)
     # the lambda must be explicitly unary: F.transform feeds (element,
     # index) to a two-parameter callable, and F.trim's optional second
     # parameter is the trim-character set — the index would silently

@@ -171,6 +171,37 @@ def _zorder_expr(cols_ranges: list[tuple[str, float, float]],
     return z
 
 
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable —
+    what a parquet scan reports for any written type (Spark's
+    ``DataType.asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _written_schema(schema: T.StructType, partition_by: str | None = None) -> T.StructType:
+    """The schema a snapshot's manifest records for a frame it wrote,
+    derived from the frame (free analysis metadata) instead of a
+    read-back (a one-task schema-inference job): every field nullable,
+    the partition column last. The partition column keeps its WRITTEN
+    type — a read-back would infer it from the directory names, which
+    turns a long ``sig_prefix`` into an int and would turn digit-only
+    string values into numbers."""
+    fields = _as_nullable(schema).fields
+    return T.StructType(
+        [f for f in fields if f.name != partition_by]
+        + [f for f in fields if f.name == partition_by]
+    )
+
+
 # Delete-key sets are broadcast to every task while they are small (the
 # common takedown case: a key file of doc ids), but takedowns accumulate
 # without bound; past this many bytes of ESTIMATED IN-MEMORY relation
@@ -330,7 +361,15 @@ class SnapshotCatalog:
         Accounting never re-reads the written data: the total row count
         is an ``Observation`` metric collected DURING the write job, and
         per-partition counts come from parquet footers (when partitioned
-        by the count key) or one column-pruned aggregate otherwise.
+        by the count key) or one aggregate over a scan of the count_by
+        column alone, with its known type, otherwise.
+
+        The manifest's ``schema`` is the read contract: every read scans
+        the snapshot with it. It is derived from ``df.schema`` (free
+        analysis metadata), not read back from the files, so a commit
+        starts no schema-inference job: every field nullable (as any
+        parquet scan reports it), the partition column last with its
+        written type (see ``_written_schema``).
 
         cluster_by: sort each write task's rows by these columns before
         encoding (Iceberg's sort-order data layout). Narrow (no shuffle)
@@ -437,9 +476,11 @@ class SnapshotCatalog:
             else:
                 # unpartitioned: one aggregate reading ONLY the count_by
                 # column (column-pruned parquet scan of the written data)
+                count_col = T.StructType([df.schema[count_by]])
                 per_part = {
                     str(r[count_by]): r["n"]
-                    for r in spark.read.parquet(data_dir)
+                    for r in spark.read.schema(_written_schema(count_col))
+                    .parquet(data_dir)
                     .groupBy(count_by)
                     .agg(F.count(F.lit(1)).alias("n"))
                     .collect()
@@ -477,19 +518,12 @@ class SnapshotCatalog:
                     cum_parts[k] = cum_parts.get(k, 0) + v
         stat_cols = stats_by if stats_by is not None else (cluster_by or [])
         file_stats = _footer_file_stats(data_dir, stat_cols) if stat_cols else None
-        # a 0-row delta (e.g. an increment that was entirely duplicates)
-        # writes no parquet files; the declared schema stands in for the
-        # read-back and reads skip the snapshot via row_count == 0
-        if total:
-            schema_json = spark.read.parquet(data_dir).schema.jsonValue()
-        else:
-            schema_json = df.schema.jsonValue()
         manifest = {
             "table": table,
             "snapshot": snap,
             "committed": True,
             "created_at_unix": int(t0),
-            "schema": schema_json,
+            "schema": _written_schema(df.schema, partition_by).jsonValue(),
             "row_count": total,
             "partition_counts": per_part,
             "cumulative_row_count": cum_total,
@@ -617,10 +651,10 @@ class SnapshotCatalog:
         snap = f"snap-{len(snaps) + 1:05d}"
         snap_dir = os.path.join(self._table_dir(table), snap)
         delete_dir = os.path.join(snap_dir, "deletes")
-        keys.select(*on).distinct().coalesce(1).write.mode("overwrite").parquet(
-            delete_dir
-        )
-        committed_keys = spark.read.parquet(delete_dir)
+        key_frame = keys.select(*on)
+        key_schema = _written_schema(key_frame.schema)
+        key_frame.distinct().coalesce(1).write.mode("overwrite").parquet(delete_dir)
+        committed_keys = spark.read.schema(key_schema).parquet(delete_dir)
         if _broadcast_estimate_bytes(delete_dir) <= _DELETE_BROADCAST_MAX_BYTES:
             committed_keys = F.broadcast(committed_keys)
 
@@ -662,6 +696,7 @@ class SnapshotCatalog:
             "deleted_row_count": deleted_total,
             "deleted_partition_counts": per_part_deleted,
             "equality_delete_cols": list(on),
+            "equality_delete_schema": key_schema.jsonValue(),
             "cumulative_row_count": cum_total,
             "cumulative_partition_counts": cum_parts,
             "parent": parent,
@@ -679,12 +714,13 @@ class SnapshotCatalog:
 
     def _delete_specs(
         self, table: str, snaps: list[str]
-    ) -> dict[str, list[tuple[list[str], str]]]:
+    ) -> dict[str, list[tuple[list[str], str, dict | None]]]:
         """For each chain snapshot (oldest first): the (key_cols,
-        delete_dir) pairs from STRICTLY LATER delete snapshots that apply
-        to its rows. Manifests only."""
-        specs: dict[str, list[tuple[list[str], str]]] = {}
-        acc: list[tuple[list[str], str]] = []
+        delete_dir, key_schema) triples from STRICTLY LATER delete
+        snapshots that apply to its rows. Manifests only; key_schema is
+        None for delete snapshots committed before it was recorded."""
+        specs: dict[str, list[tuple[list[str], str, dict | None]]] = {}
+        acc: list[tuple[list[str], str, dict | None]] = []
         for s in reversed(snaps):
             specs[s] = list(acc)
             m = self.manifest(table, s) or {}
@@ -693,6 +729,7 @@ class SnapshotCatalog:
                     (
                         m["equality_delete_cols"],
                         os.path.join(self._table_dir(table), s, "deletes"),
+                        m.get("equality_delete_schema"),
                     )
                 )
         return specs
@@ -701,18 +738,24 @@ class SnapshotCatalog:
         self,
         spark: SparkSession,
         df: DataFrame,
-        specs: list[tuple[list[str], str]],
+        specs: list[tuple[list[str], str, dict | None]],
     ) -> DataFrame:
         # many takedowns accumulate many delete snapshots; group the key
         # files by key-column set so a chain element pays ONE broadcast
         # anti-join per column set, not one per delete commit (the union
         # of key files is what Iceberg's reader does with its delete-file
         # list for a data file)
-        grouped: dict[tuple[str, ...], list[str]] = {}
-        for cols, delete_dir in specs:
-            grouped.setdefault(tuple(cols), []).append(delete_dir)
-        for cols, dirs in grouped.items():
-            keys = spark.read.parquet(*dirs)
+        grouped: dict[tuple[str, ...], list[tuple[str, dict | None]]] = {}
+        for cols, delete_dir, key_schema in specs:
+            grouped.setdefault(tuple(cols), []).append((delete_dir, key_schema))
+        for cols, entries in grouped.items():
+            dirs = [d for d, _ in entries]
+            schemas = [k for _, k in entries]
+            reader = spark.read
+            if schemas[0] is not None and all(k == schemas[0] for k in schemas):
+                # one recorded key schema: no schema-inference job
+                reader = reader.schema(T.StructType.fromJson(schemas[0]))
+            keys = reader.parquet(*dirs)
             # broadcast preserves the child's (bucketed) partitioning, so
             # it's the default — but the accumulated key union grows with
             # every takedown, so past the size bound fall back to a plain
@@ -939,6 +982,19 @@ class SnapshotCatalog:
                 out.append(os.path.join(data_dir, d))
         return out
 
+    @staticmethod
+    def _scan_files(
+        spark: SparkSession, m: dict, data_dir: str, paths: list[str] | None = None
+    ) -> DataFrame:
+        """Scan one snapshot's data files with its manifest schema, so
+        Spark never starts a job to infer it. ``paths`` restricts the
+        scan to files or partition directories under ``data_dir``
+        (basePath keeps the partition column)."""
+        reader = spark.read.schema(T.StructType.fromJson(m["schema"]))
+        if paths is None:
+            return reader.parquet(data_dir)
+        return reader.option("basePath", data_dir).parquet(*paths)
+
     def read(
         self,
         spark: SparkSession,
@@ -983,7 +1039,11 @@ class SnapshotCatalog:
         scans that REPORT their hash partitioning to the planner — callers
         that join/anti-join the chain element-wise keep every element
         shuffle-free on the bucket key, which a union (whose output
-        partitioning Spark discards) cannot."""
+        partitioning Spark discards) cannot.
+
+        Every scan uses its snapshot's manifest schema (bucketed tables
+        are declared from it too), so building the parts reads manifests
+        and lists files but starts no Spark job."""
         snap = self._resolve_ref(table, snap) or self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"no committed snapshot for table '{table}'")
@@ -1010,11 +1070,9 @@ class SnapshotCatalog:
                 )
                 if not keep:
                     continue
-                parts.append(
-                    spark.read.option("basePath", data_dir).parquet(*keep)
-                )
+                parts.append(self._scan_files(spark, m, data_dir, keep))
             else:
-                parts.append(spark.read.parquet(data_dir))
+                parts.append(self._scan_files(spark, m, data_dir))
             if deletes.get(s):
                 # broadcast LEFT ANTI keeps the part's reported
                 # partitioning (bucketed parts stay join-co-located)
@@ -1184,17 +1242,12 @@ class SnapshotCatalog:
         parts: list[DataFrame] = []
         for plan in self.plan_scan(table, filters, snap,
                                    follow_parents=follow_parents):
-            if plan["paths"] is None:
-                df = spark.read.parquet(plan["data_dir"])
-            elif not plan["paths"]:
+            if plan["paths"] is not None and not plan["paths"]:
                 continue  # every file pruned for this snapshot
-            else:
-                # basePath keeps partition-column discovery working when
-                # reading an explicit file subset under key=value dirs
-                df = (
-                    spark.read.option("basePath", plan["data_dir"])
-                    .parquet(*plan["paths"])
-                )
+            df = self._scan_files(
+                spark, self.manifest(table, plan["snapshot"]),
+                plan["data_dir"], plan["paths"],
+            )
             if _deletes.get(plan["snapshot"]):
                 df = self._apply_deletes(spark, df, _deletes[plan["snapshot"]])
             parts.append(df)
@@ -1384,8 +1437,8 @@ class SnapshotCatalog:
                     sm = self.manifest(table, s) or {}
                     if sm.get("equality_delete_cols") or sm.get("row_count") == 0:
                         continue  # keys-only or empty delta
-                    part = spark.read.parquet(
-                        os.path.join(self._table_dir(table), s, "data")
+                    part = self._scan_files(
+                        spark, sm, os.path.join(self._table_dir(table), s, "data")
                     )
                     if del_specs.get(s):
                         # broadcast anti preserves partitioning, so the

@@ -126,16 +126,17 @@ def doc_source_dim(docs: DataFrame, num_sinks: int = 4) -> DataFrame:
 
 def source_dim(spark: SparkSession, num_sources: int = 20, num_sinks: int = 4) -> DataFrame:
     """The small lookup dimension the enrich stage broadcast-joins:
-    source → sink assignment, category, quality weight. Deterministic."""
-    rows = []
+    source → sink assignment, category, quality weight. Deterministic.
+
+    A SQL ``VALUES`` list, so the dimension is a JVM-local relation:
+    broadcasting it starts no Python job (``createDataFrame`` on Python
+    rows would ship them through a Python RDD on every run)."""
     cats = ["web", "code", "books", "forums"]
-    for i in range(num_sources):
-        rows.append(
-            {
-                "source": f"src{i:02d}",
-                "sink": f"sink_{i % num_sinks}",
-                "category": cats[i % len(cats)],
-                "quality_weight": round(1.0 - 0.03 * i, 4),
-            }
-        )
-    return spark.createDataFrame(rows).select("source", "sink", "category", "quality_weight")
+    rows = ", ".join(
+        f"('src{i:02d}', 'sink_{i % num_sinks}', '{cats[i % len(cats)]}', "
+        f"{round(1.0 - 0.03 * i, 4)!r}D)"
+        for i in range(num_sources)
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t(source, sink, category, quality_weight)"
+    )

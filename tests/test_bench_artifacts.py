@@ -108,10 +108,12 @@ class TestEmitArtifacts:
         assert parsed["run_id"] == "run-sig-test"
         assert parsed["partial"] is True
         assert parsed["sections_done"] == ["headline"]
-        assert parsed["errors_count"] == 1
-        assert json.load(open(detail_path))["errors"]["__signal__"].startswith(
-            "killed by signal 15"
-        )
+        # a kill is reported as a kill, never as a query error
+        assert parsed["errors_count"] == 0
+        assert parsed["killed_by_signal"]["signal"] == signal.SIGTERM
+        on_disk = json.load(open(detail_path))
+        assert "errors" not in on_disk
+        assert on_disk["killed_by_signal"]["signal"] == signal.SIGTERM
 
     def test_total_deadline_math(self, monkeypatch):
         """TOTAL_BUDGET bounds the scaling hunt: the section deadline and
@@ -141,3 +143,74 @@ class TestEmitArtifacts:
         assert "queries" not in parsed
         # the detail file keeps EVERYTHING regardless of the line cap
         assert "queries" in json.load(open(detail_path))
+
+
+class TestDeliveryBounds:
+    """The summary line must fit a 2,000-byte stdout tail window with
+    room to spare, and the total-run deadline must sit below the outer
+    3,600 s kill."""
+
+    def test_defaults(self):
+        import inspect
+
+        default = inspect.signature(bench._emit_artifacts).parameters["max_line"]
+        assert default.default <= 1500
+        if "QSVSPARK_BENCH_TOTAL_BUDGET" not in os.environ:
+            assert 0 < bench.TOTAL_BUDGET <= 3200
+
+    def _full_state(self):
+        q = {n: 0.123 for n in bench.HEADLINE}
+        ext = {f"extension_{i:02d}": 1.234 for i in range(19)}
+        return {
+            "run_id": "run-full", "sf": 0.1,
+            "sections_done": ["headline", "extensions", "pipeline", "skew",
+                              "sf1", "scaling"],
+            "timings": q, "steady": dict(q),
+            "ext_timings": ext, "ext_steady": dict(ext),
+            "query_errors": {},
+            "section_probes": {"before_headline_gbps": 7.41,
+                               "between_gbps": 19.86,
+                               "after_extensions_gbps": 18.2},
+            "pipeline": {
+                "rows": 4000000, "seconds": 21.487, "sequences_per_sec": 186161.9,
+                "increment": {"sequences_per_sec": 123456.7},
+                "pack": {"rows_per_sec": 654321.0},
+                "sequences": {"tokens_per_sec": 29000000.0},
+            },
+            "skew": {"rows": 4000000,
+                     "agg": {"speedup": 2.27, "skew_neutral_by_plan": True,
+                             "results_match": True},
+                     "join": {"speedup": 4.02, "results_match": True}},
+            "sf1": {"rows_tokens": 40000000,
+                    "pipeline": {"sequences_per_sec": 215000.0},
+                    "increment": {"sequences_per_sec": 190000.0},
+                    "per_row_rate_ratio": {n: 1.05 for n in bench.SF1_QUERIES}},
+            "scaling": {"rows": 12000000, "scaling_efficiency": 0.863,
+                        "counts_match": True, "phase": "clean",
+                        "hw_pair_efficiency": 0.91, "job_vs_hw_ceiling": 0.95,
+                        "bandwidth_capped": False,
+                        "pairs": {"1v4": {"scaling_efficiency": 0.863}},
+                        "errors": []},
+        }
+
+    def test_full_summary_fits_and_keeps_evidence(self, tmp_path):
+        """A complete run's summary fits the default cap by dropping the
+        per-query maps first; the headline and evidence sections stay."""
+        detail_path = str(tmp_path / "d.json")
+        state = self._full_state()
+        line = bench._flush_state(state, detail_path, final=True)
+        parsed = json.loads(line)
+        assert len(line) <= 1500
+        assert "queries" not in parsed and "extensions" not in parsed
+        for key in ("value", "value_steady", "pipeline", "scaling", "run_id"):
+            assert parsed.get(key) is not None, key
+        assert parsed["scaling"]["scaling_efficiency"] == 0.863
+        assert json.load(open(detail_path))["queries"] == state["timings"]
+
+    def test_oversized_summary_keeps_scalar_headline(self, tmp_path):
+        summary = {"value": 1.0, "run_id": "run-x",
+                   "sections_done": ["s" * 3000], "pipeline": {"k": "v" * 3000}}
+        line = bench._emit_artifacts(summary, {}, str(tmp_path / "d.json"))
+        parsed = json.loads(line)
+        assert len(line) <= 1500
+        assert parsed["value"] == 1.0 and parsed["truncated"] is True

@@ -401,27 +401,59 @@ class TestRetiredRegistryVariants:
         assert set(med) == set(std) and len(med) >= 3
         assert all(v is None or v >= 0 for v in std.values())
 
-    def test_r5_retired_variants_still_run(self, spark):
+    def test_r5_retired_variants_still_run(self, spark, tmp_path):
         """contains_ci / grep_invert / pivot_mean / timeline_sum rotated
         out of the 50-slot registry for line_dups / vocab_topk /
         span_pairs / semdedup; their base operators stay oracle-checked
-        and the variants stay exercised here."""
+        and the variants stay exercised here; grep_invert, pivot_mean and
+        join_left each with a cheap value invariant."""
         import __spark_entry__ as e
+        from qsvspark import Q
 
         sf = "/root/testdata/sf0.001"
         ci = e.q_contains_ci(spark, sf)
         assert ci.count() > 0  # AUTOMOBILE segment matches 'AUTO' case-insensitively
-        inv = e.q_grep_invert(spark, sf)
-        grep = e.q_grep(spark, sf)
-        # invert selects the complement regex family on the same table
-        assert inv.count() > 0 and grep.count() > 0
+        # grep_invert is the exact complement of grep on the same pattern
+        nation = e._t(spark, sf, "nation")
+        inv = e.q_grep_invert(spark, sf).count()
+        assert 0 < inv < nation.count()
+        assert Q(nation).grep("1").df.count() + inv == nation.count()
+        # pivot_mean == pivot_sum / pivot_count per (flag, status) group
         pm = {tuple(r)[:2]: r["qty_mean"] for r in e.q_pivot_mean(spark, sf).collect()}
-        assert len(pm) >= 3 and all(v > 0 for v in pm.values())
+        sums = {tuple(r)[:2]: r["qty_cents_sum"] for r in e.q_pivot(spark, sf).collect()}
+        counts = {
+            tuple(r)[:2]: r["l_quantity_count"]
+            for r in Q(e._t(spark, sf, "lineitem")).pivot(
+                rows="l_returnflag", cols="l_linestatus",
+                values="l_quantity", agg="count",
+            ).df.collect()
+        }
+        assert len(pm) >= 3 and set(pm) == set(sums) == set(counts)
+        for k, mean in pm.items():
+            assert abs(mean - sums[k] / 100 / counts[k]) <= 5e-5 + 1e-9, k
         ts = e.q_timeline_sum(spark, sf)
         assert ts.count() > 0 and "sum_cents" in ts.columns
-        # join_left rotated out for dedup_groups; join stays oracle-checked
-        jl = e.q_join_left(spark, sf)
-        assert jl.count() > 0 and "n_name" in jl.columns
+        # join_left keeps every customer once; unmatched keys get null
+        # n_name (one customer is given a nation key no nation has)
+        cust = e._t(spark, sf, "customer")
+        orphan = cust.limit(1).withColumn("c_custkey", F.lit(10**9).cast(
+            cust.schema["c_custkey"].dataType
+        )).withColumn("c_nationkey", F.lit(999).cast(
+            cust.schema["c_nationkey"].dataType
+        ))
+        cust.unionByName(orphan).write.parquet(str(tmp_path / "customer.parquet"))
+        nation.write.parquet(str(tmp_path / "nation.parquet"))
+        cust = e._t(spark, str(tmp_path), "customer")
+        nation_keys = {r[0] for r in nation.select("n_nationkey").collect()}
+        jl = e.q_join_left(spark, str(tmp_path)).collect()
+        by_key = {r["c_custkey"]: r for r in jl}
+        assert len(jl) == len(by_key) == cust.count()
+        unmatched = 0
+        for r in cust.select("c_custkey", "c_nationkey").collect():
+            row = by_key[r["c_custkey"]]
+            assert (row["n_name"] is None) == (r["c_nationkey"] not in nation_keys)
+            unmatched += row["n_name"] is None
+        assert unmatched >= 1
 
 
 class TestConnectedComponents:
@@ -486,6 +518,48 @@ class TestLineDups:
         assert out[1]["dup_line_chars"] == 2
         assert out[2]["dup_line_chars"] == 0 and out[2]["dup_line_frac"] == 0.0
         assert out[3]["total_lines"] == 0 and out[3]["dup_line_char_frac"] == 0.0
+
+    def test_query_and_oracle_agree_on_vertical_tab(self, spark, tmp_path):
+        """Java's \\s matches \\x0B and RE2's does not. The line_dups
+        registry query and its DuckDB oracle must still agree on a doc
+        where a vertical tab sits between words."""
+        import duckdb
+
+        import __spark_entry__ as e
+
+        docs = [
+            (0, "a b c d e\x0bf g h i j k l"),
+            (1, "one two three\x0b four five six seven"),
+            (3, "x\x0by w1 w2 w3 w4 w5 w6 w7"),
+            (6, "p q r s t p q r s t"),
+        ]
+        spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+            str(tmp_path / "documents.parquet")
+        )
+        got = sorted(
+            tuple(r) for r in e.q_line_dups(spark, str(tmp_path)).collect()
+        )
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"'{tmp_path}/documents.parquet/*.parquet'"
+        )
+        want = sorted(con.execute(e.oracle_sql()["line_dups"]).fetchall())
+        assert len(got) == len(docs)
+        assert got == want
+
+    @pytest.mark.parametrize("sep", ["|", ".", "\\E.", "a+"])
+    def test_separator_is_literal(self, spark, sep):
+        """``sep`` is a literal string, not a regex: '|' must not split
+        between every character, '.' must not match everything."""
+        from qsvspark.functions import add_line_dup_signals
+
+        text = sep.join(["ab", "cd", "ab"])
+        row = add_line_dup_signals(
+            spark.createDataFrame([(0, text)], ["doc_id", "text"]), sep=sep
+        ).collect()[0]
+        assert (row["total_lines"], row["distinct_lines"]) == (3, 2)
+        assert row["dup_line_chars"] == 2
 
 
 class TestVocabTopk:

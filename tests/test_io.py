@@ -1146,3 +1146,144 @@ class TestWriteAuditPublish:
         # nothing moved: readers still see the concurrent commit
         assert cat.current_snapshot("t") == m3["snapshot"]
         assert cat.read(spark, "t").count() == 2
+
+
+class TestManifestSchemaContract:
+    """The manifest schema is the read contract. A commit derives it
+    from the written frame and a read scans with it, so neither starts a
+    schema-inference job. For every table kind the repo writes, it must
+    equal what a read-back of the written files reports — except that a
+    partition column keeps its written type, where a read-back infers
+    one from the directory names."""
+
+    @pytest.fixture(scope="class")
+    def warehouses(self, spark, tmp_path_factory):
+        from qsvspark.functions import AnnIndex, IvfIndex
+        from qsvspark.pipeline.northstar import NorthStarPipeline
+        from qsvspark.pipeline.tokens import synth_tokens
+
+        root = tmp_path_factory.mktemp("schema_contract")
+        pipe = NorthStarPipeline(
+            spark, str(root / "pipe"), dedup="exact", quarantine=True
+        )
+        pipe.run(synth_tokens(spark, 300, seed=11), "bulk")
+        pipe.run_increment(synth_tokens(spark, 100, seed=12), "inc1")
+        pipe.pack_sinks(seq_len=256, materialize=True)
+        assert pipe.compact_sinks() is not None  # routed chain → compacted
+        bucketed = NorthStarPipeline(
+            spark, str(root / "bucketed"), dedup="exact", dedup_keys_buckets=4
+        )
+        bucketed.run(synth_tokens(spark, 200, seed=13), "bulk")
+        emb = spark.range(400).select(
+            F.col("id").alias("vec_id"),
+            F.array(
+                *(F.sin(F.col("id") * 0.37 + j).cast("float") for j in range(64))
+            ).alias("embedding"),
+        )
+        IvfIndex(str(root / "ivf")).build(emb, n_centroids=4, sample_n=64)
+        AnnIndex(str(root / "ann"), bits=8, prefix_bits=4, seed=1).build(emb, dim=64)
+        cat = SnapshotCatalog(str(root / "po"))
+        m1 = cat.write(
+            spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "k string, v int"),
+            "t", partition_by="k", count_by="k",
+        )
+        cat.write(
+            spark.createDataFrame([("a", 5), ("b", 99)], "k string, v int"),
+            "t", partition_by="k", count_by="k", parent=m1["snapshot"],
+            replace_partitions=["b"],
+        )
+        cat.delete_rows(spark, "t", spark.createDataFrame([(2,)], "v int"), on=["v"])
+        return [str(root / d) for d in ("pipe", "bucketed", "ivf", "ann", "po")]
+
+    @staticmethod
+    def _snapshots(roots):
+        """(catalog, table, manifest) for every committed snapshot."""
+        for r in roots:
+            cat = SnapshotCatalog(r)
+            for table in sorted(os.listdir(r)):
+                for snap in cat._snaps(table):
+                    m = cat.manifest(table, snap)
+                    if m and m.get("committed"):
+                        yield cat, table, m
+
+    def test_manifest_schema_equals_read_back(self, spark, warehouses):
+        from pyspark.sql import types as T
+
+        seen = set()
+        for cat, table, m in self._snapshots(warehouses):
+            if m.get("equality_delete_cols") or not m["row_count"]:
+                continue  # no data files to read back
+            data_dir = os.path.join(cat.root, table, m["snapshot"], "data")
+            read_back = spark.read.parquet(data_dir).schema
+            recorded = T.StructType.fromJson(m["schema"])
+            key = m.get("partition_by")
+            if key:
+                # the one documented difference: the partition column
+                # keeps its written type instead of the inferred one
+                got, inferred = recorded[key].dataType, read_back[key].dataType
+                if (table, key) == ("ann_index", "sig_prefix"):
+                    assert (got, inferred) == (T.LongType(), T.IntegerType())
+                else:
+                    assert got == inferred, (table, key)
+                read_back = T.StructType(
+                    [recorded[key] if f.name == key else f for f in read_back.fields]
+                )
+            assert recorded == read_back, (table, m["snapshot"])
+            op = (m.get("lineage") or {}).get("op")
+            seen.add(f"{table}:{op}" if op else table)
+            if m.get("bucket_by"):
+                seen.add(f"{table}:bucketed")
+            if m.get("replace_partitions"):
+                seen.add(f"{table}:replace_partitions")
+        assert {
+            "routed", "routed:compact", "dedup_keys", "dedup_keys:bucketed",
+            "aggregates", "packed", "sequences", "ivf_index", "ann_index",
+            "t:replace_partitions",
+        } <= seen
+
+    def test_read_starts_no_spark_job(self, spark, warehouses):
+        sc = spark.sparkContext
+        group = "catalog-read-no-jobs"
+        sc.setJobGroup(group, "SnapshotCatalog.read")
+        try:
+            frames = {
+                (cat.root, table): cat.read(spark, table)
+                for cat, table, _ in self._snapshots(warehouses)
+            }
+            # planning stays job-free too; only execution may start jobs
+            for df in frames.values():
+                df._jdf.queryExecution().sparkPlan()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(frames) >= 9
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    def test_reads_return_committed_rows(self, spark, warehouses):
+        """Reading with the recorded schema gives the rows the manifest
+        accounts for, including the masked-partition and delete chain."""
+        for cat, table, m in self._snapshots(warehouses):
+            if m["snapshot"] != cat.current_snapshot(table):
+                continue
+            assert cat.read(spark, table).count() == m["cumulative_row_count"]
+        po = SnapshotCatalog(warehouses[-1])
+        assert sorted((r.k, r.v) for r in po.read(spark, "t").collect()) == [
+            ("a", 1), ("a", 5), ("b", 99),
+        ]
+
+    def test_written_schema_rule(self):
+        from pyspark.sql import types as T
+
+        from qsvspark.io.snapshot import _written_schema
+
+        src = T.StructType([
+            T.StructField("p", T.LongType(), False),
+            T.StructField("a", T.ArrayType(T.IntegerType(), False), False),
+            T.StructField("m", T.MapType(T.StringType(), T.StructType(
+                [T.StructField("x", T.IntegerType(), False)]), False), False),
+        ])
+        assert _written_schema(src, "p") == T.StructType([
+            T.StructField("a", T.ArrayType(T.IntegerType(), True), True),
+            T.StructField("m", T.MapType(T.StringType(), T.StructType(
+                [T.StructField("x", T.IntegerType(), True)]), True), True),
+            T.StructField("p", T.LongType(), True),
+        ])

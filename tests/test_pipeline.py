@@ -94,6 +94,56 @@ class TestEnrichRouteAggregate:
         assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
 
 
+class TestMetadataJobs:
+    """Catalog bookkeeping starts no Spark job: commits and reads take
+    the schema from the manifest, and the source dimension is a
+    JVM-local relation. What is left per ingest is the data work."""
+
+    JOB_BUDGET = 14
+
+    def test_source_dim_rows_and_schema_unchanged(self, spark):
+        cats = ["web", "code", "books", "forums"]
+        expected = [
+            (f"src{i:02d}", f"sink_{i % 4}", cats[i % 4], round(1.0 - 0.03 * i, 4))
+            for i in range(20)
+        ]
+        dim = source_dim(spark)
+        assert [tuple(r) for r in dim.collect()] == expected
+        assert [(f.name, f.dataType.simpleString()) for f in dim.schema] == [
+            ("source", "string"), ("sink", "string"),
+            ("category", "string"), ("quality_weight", "double"),
+        ]
+        assert source_dim(spark, num_sources=3, num_sinks=2).collect()[2][1] == "sink_0"
+        # a local relation: no Python RDD behind the broadcast
+        plan = dim._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation")
+
+    def test_run_and_pack_within_job_budget(self, spark, tmp_path_factory):
+        root = tmp_path_factory.mktemp("job_budget")
+        bad = spark.createDataFrame(
+            TestQuarantine.BAD, "doc_id string, tokens array<int>, n_tok int, source string"
+        )
+        clean = synth_tokens(spark, 2000, seed=SEED)
+        clean.unionByName(clean.limit(100)).unionByName(bad).write.parquet(
+            str(root / "in")
+        )
+        tokens = spark.read.parquet(str(root / "in"))
+        sc = spark.sparkContext
+        group = "northstar-job-budget"
+        sc.setJobGroup(group, "run + pack_sinks(materialize=True)")
+        try:
+            pipe = NorthStarPipeline(
+                spark, str(root / "wh"), dedup="exact", quarantine=True
+            )
+            metrics = pipe.run(tokens, "job-budget")
+            pipe.pack_sinks(seq_len=2048, materialize=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert metrics["duplicates_dropped"] == 100 and metrics["quarantined"] == 3
+        assert 0 < len(jobs) <= self.JOB_BUDGET, len(jobs)
+
+
 class TestSaltedJoin:
     """salted_join: the enrich fallback when the dimension outgrows
     broadcast and the join key is skewed — deterministic salt on the big
