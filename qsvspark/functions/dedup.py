@@ -14,12 +14,56 @@ Scale notes (the whole point of these):
               bucket groupBy, never a cross join.
   - embedding near-dup: exact cosine over LSH-candidate pairs; the
               brute-force variant exists for small dims / verification.
+
+Wide expressions (one lane, band or literal vector per term) are built
+as ONE SQL text and one ``F.expr`` call, never term by term through the
+Column API: each Column call is a driver→JVM round trip, so an 80-lane
+signature built term by term costs thousands of them before any job runs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dlit(x: float) -> str:
+    """Exact SQL double literal: ``repr`` round-trips every finite double
+    and the ``D`` suffix keeps it a double (a bare ``0.5`` is a decimal)."""
+    x = float(x)
+    return repr(x) + "D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def _vec_sql(vec) -> str:
+    """A literal vector as an ``array<double>`` SQL expression."""
+    return "array(" + ", ".join(_dlit(x) for x in vec) + ")"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two array SQL expressions: a left fold (``aggregate``)
+    over the element-wise products, each cast to double — the one fold
+    order every cosine, signature and DuckDB replica here reproduces."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (__x, __y) -> CAST(__x * __y AS DOUBLE)),"
+        f" 0.0D, (__acc, __p) -> __acc + __p)"
+    )
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0.0D, (__acc, __x) -> __acc + CAST(__x * __x AS DOUBLE)))"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """Cosine of two array SQL expressions (column identifiers, literal
+    vectors or lambda variables)."""
+    return f"{dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
 
 
 def _norm_text(text_col: str) -> Column:
@@ -36,6 +80,11 @@ def hash60(c: Column, salt: str = "") -> Column:
     external system must reproduce the hashes."""
     s = F.concat(c, F.lit(salt)) if salt else c
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+
+
+def _hash60_sql(s: str, salt: str) -> str:
+    """hash60 of a SQL expression, as SQL text (same expression tree)."""
+    return f"CAST(conv(substring(md5(concat({s}, '{salt}')), 1, 15), 16, 10) AS BIGINT)"
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -60,13 +109,6 @@ def _shingle_seq(norm: Column, k: int) -> Column:
     n = F.length(norm)
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     return F.transform(idx, lambda i: F.substring(norm, i, k))
-
-
-def _shingles(text_col: str, k: int) -> Column:
-    """Distinct character k-shingles (inline normalization — only for
-    one-shot use; pipelines stage the normalized text first, see
-    _shingle_seq)."""
-    return F.array_distinct(_shingle_seq(_norm_text(text_col), k))
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -117,60 +159,132 @@ def shingle_hashes(text_col: str, k: int) -> Column:
 
 
 def minhash_signature_affine(
-    hashed: Column, num_hashes: int = 16, seed: int = 7
+    hashed: str, num_hashes: int = 16, seed: int = 7
 ) -> Column:
-    """Signature from a pre-materialized shingle-hash array: lane j is
-    min over (a_j·h + b_j) mod p. ``hashed`` must be an attribute
-    reference behind a projection boundary — each array_min re-evaluates
-    its input expression, so an inline expression would re-hash every
-    shingle num_hashes times (the exact pathology this family removes)."""
+    """Signature from a pre-materialized shingle-hash array column: lane
+    j is min over (a_j·h + b_j) mod p. ``hashed`` names a column behind a
+    projection boundary — each array_min re-evaluates its input
+    expression, so an inline expression would re-hash every shingle
+    num_hashes times (the exact pathology this family removes)."""
+    h = _ident(hashed)
+    lanes = ", ".join(
+        f"array_min(transform({h}, __h -> pmod(__h * {a} + {b}, {_MH_PRIME})))"
+        for a, b in _affine_params(num_hashes, seed)
+    )
+    return F.expr(f"array({lanes})")
 
-    def lane(a: int, b: int):
-        return lambda h: F.pmod(a * h + b, F.lit(_MH_PRIME))
 
-    return F.array(
-        *[
-            F.array_min(F.transform(hashed, lane(a, b)))
-            for a, b in _affine_params(num_hashes, seed)
-        ]
+def _md5_signature(shingles: str, num_hashes: int) -> Column:
+    """Oracle-family signature: lane j is min over the shingles of
+    hash60(shingle || '|' || j) — cross-engine reproducible (see hash60).
+    ``shingles`` names a staged DISTINCT shingle array (the DuckDB
+    replica uses list_distinct)."""
+    sh = _ident(shingles)
+    lanes = ", ".join(
+        f"array_min(transform({sh}, __s -> {_hash60_sql('__s', f'|{j}')}))"
+        for j in range(num_hashes)
+    )
+    return F.expr(f"array({lanes})")
+
+
+def _signature_frame(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, k: int, hash_fn: str
+) -> DataFrame:
+    """``(id_col, __sig)``: the staged MinHash signature of every row.
+
+    Evaluate-once staging, the property every heavy expression here
+    needs (Catalyst does not CSE repeated or lambda-referenced
+    subexpressions):
+      1. the NORMALIZED TEXT goes behind a projection boundary — the
+         shingle transform references it once per element, so inline it
+         would re-run lower/regexp_replace/trim |shingles| times per row
+         (measured 16 s → 0.3 s single-core at sf0.1);
+      2. the per-shingle work (distinct array / hash array) goes behind a
+         second boundary — the num_hashes array_min lanes each
+         re-evaluate their input (measured 45 s → 10 s at sf0.01).
+
+    hash_fn='md5_60' is the oracle family (per-lane salted md5 over the
+    distinct shingles); 'xxhash64' is the production family (one
+    xxhash64 per shingle, no distinct pass — min over a multiset equals
+    min over its set — and affine lanes derived from the hash array)."""
+    staged = df.select(F.col(id_col), _norm_text(text_col).alias("__t"))
+    shingles = _shingle_seq(F.col("__t"), k)
+    if hash_fn == "md5_60":
+        return staged.select(
+            F.col(id_col), F.array_distinct(shingles).alias("__sh")
+        ).select(F.col(id_col), _md5_signature("__sh", num_hashes).alias("__sig"))
+    return staged.select(
+        F.col(id_col),
+        F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))).alias("__hs"),
+    ).select(F.col(id_col), minhash_signature_affine("__hs", num_hashes).alias("__sig"))
+
+
+def _explode_bands(sig: DataFrame, id_col: str, buckets: list[str]) -> DataFrame:
+    """``(id_col, band, bucket)``: one row per band, bucket b given as
+    SQL text over the row's ``__sig``."""
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {bucket})" for b, bucket in enumerate(buckets)
+    )
+    return sig.select(
+        F.col(id_col), F.expr(f"explode(array({structs}))").alias("bb")
+    ).select(id_col, "bb.band", "bb.bucket")
+
+
+def minhash_bands(
+    sig: DataFrame, id_col: str, num_hashes: int, bands: int, hash_fn: str = "xxhash64"
+) -> DataFrame:
+    """Band buckets of a ``(id_col, __sig)`` signature frame — the one
+    bucket format batch LSH and the streaming operator both key on.
+    Band b hashes lanes [b·r, (b+1)·r), r = num_hashes // bands; the
+    md5_60 family writes the bucket as a '-'-joined string any engine
+    can reproduce."""
+    r = num_hashes // bands
+
+    def bucket(b: int) -> str:
+        lanes = [f"__sig[{b * r + i}]" for i in range(r)]
+        if hash_fn == "md5_60":
+            return "concat_ws('-', " + ", ".join(f"CAST({v} AS STRING)" for v in lanes) + ")"
+        return f"CAST(xxhash64({', '.join(lanes)}) AS STRING)"
+
+    return _explode_bands(sig, id_col, [bucket(b) for b in range(bands)])
+
+
+def _member_pairs() -> Column:
+    """The i<j member combinations of a group's sorted ``__ids`` array as
+    an array of (id_a, id_b) structs — pair expansion inside each group,
+    so no self-join re-shuffles the grouped rows."""
+    ids = F.col("__ids")
+    return F.flatten(
+        F.transform(
+            ids,
+            lambda a, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)),
+                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+            ),
+        )
     )
 
 
-def minhash_signature(
-    text_col: str,
-    num_hashes: int = 16,
-    k: int = 5,
-    hash_fn: str = "xxhash64",
-    shingles: Column | None = None,
-) -> Column:
-    """Array of num_hashes minhash values.
-
-    hash_fn='md5_60': min over shingles of hash60(shingle || '|' || j) —
-    cross-engine reproducible (see hash60), used by the value oracle.
-    hash_fn='xxhash64' (production default): the affine family above —
-    prefer calling shingle_hashes + minhash_signature_affine directly so
-    the hash array sits behind a projection boundary.
-
-    Pass ``shingles`` as a pre-materialized COLUMN whenever this feeds
-    more than a couple of hashes: each array_min re-evaluates its input
-    expression, so an inline shingle expression is normalized/substring'd/
-    deduped num_hashes times per row, while an attribute reference from a
-    projection boundary is computed once (Catalyst's CollapseProject
-    keeps the boundary for non-cheap aliases referenced multiple times —
-    measured 4.4× on the LSH pipeline)."""
-    sh = shingles if shingles is not None else _shingles(text_col, k)
-    if hash_fn == "md5_60":
-        # NB: the hash-family index must be captured via a closure
-        # factory — a two-parameter lambda would be interpreted by
-        # F.transform as (element, array_index) and silently rebind j.
-        def hash_j(j: int):
-            return lambda s: hash60(s, f"|{j}")
-
-        return F.array(
-            *[F.array_min(F.transform(sh, hash_j(j))) for j in range(num_hashes)]
-        )
-    hashed = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)))
-    return minhash_signature_affine(hashed, num_hashes)
+def _bucket_pairs(
+    banded: DataFrame, id_col: str, max_bucket_size: int | None
+) -> DataFrame:
+    """Distinct (id_a, id_b) pairs of ids sharing a (band, bucket): ONE
+    shuffle groups each bucket and expands its members as an expression
+    — a self-join on the bucket key would shuffle the banded rows twice
+    and re-run the whole signature pipeline for each side. Bucket
+    membership is O(members) state per group; the cap drops degenerate
+    buckets after a size check (their members are exact/extreme dups —
+    route through dedup_exact, O(B))."""
+    buckets = banded.groupBy("band", "bucket").agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
+    )
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
+    return (
+        buckets.select(F.explode(_member_pairs()).alias("p"))
+        .select(F.col("p.id_a"), F.col("p.id_b"))
+        .distinct()
+    )
 
 
 def minhash_lsh_pairs(
@@ -198,92 +312,11 @@ def minhash_lsh_pairs(
     into a bounded skip; dropped buckets are observable via the
     ``lsh_dropped_buckets`` metric column pattern in tests.
     """
-    rows_per_band = num_hashes // bands
-    # Evaluate-once staging, the property every heavy expression here
-    # needs (Catalyst does not CSE repeated or lambda-referenced
-    # subexpressions):
-    #   1. the NORMALIZED TEXT goes behind a projection boundary — the
-    #      shingle transform references it once per element, so inline it
-    #      would re-run lower/regexp_replace/trim |shingles| times per
-    #      row (measured 16 s → 0.3 s single-core at sf0.1);
-    #   2. the per-shingle work (distinct array / hash array) goes behind
-    #      a second boundary — the num_hashes array_min lanes each
-    #      re-evaluate their input (measured 45 s → 10 s at sf0.01).
-    # A compute-bound stage also must not inherit a byte-sized partition
-    # count — see _ensure_parallelism.
-    staged = _ensure_parallelism(df).select(
-        F.col(id_col), _norm_text(text_col).alias("__t")
-    )
-    if hash_fn == "md5_60":
-        # oracle family: per-lane salted md5 over the DISTINCT shingle
-        # array (the DuckDB replica uses list_distinct)
-        sig = staged.select(
-            F.col(id_col),
-            F.array_distinct(_shingle_seq(F.col("__t"), k)).alias("__sh"),
-        ).select(
-            F.col(id_col),
-            minhash_signature(
-                text_col, num_hashes, k, hash_fn, shingles=F.col("__sh")
-            ).alias("__sig"),
-        )
-    else:
-        # production family: one xxhash64 per shingle (no distinct pass —
-        # min over a multiset == min over its set), lanes are affine
-        # derivations of the staged hash array
-        sig = staged.select(
-            F.col(id_col),
-            F.transform(
-                _shingle_seq(F.col("__t"), k),
-                lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)),
-            ).alias("__hs"),
-        ).select(
-            F.col(id_col),
-            minhash_signature_affine(F.col("__hs"), num_hashes).alias("__sig"),
-        )
-
-    def band_bucket(b: int) -> Column:
-        vals = [F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        if hash_fn == "md5_60":
-            # concat-string bucket: reproducible in any engine
-            return F.concat_ws("-", *[v.cast("string") for v in vals])
-        return F.xxhash64(*vals).cast("string")
-
-    banded = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    # ONE shuffle: group each (band, bucket) and expand the i<j member
-    # combinations as an expression — a self-join on the bucket key would
-    # shuffle the banded rows twice and re-run the whole signature
-    # pipeline for each side. Bucket membership is O(members) state per
-    # group; the cap drops degenerate buckets after a size check (their
-    # members are exact/extreme dups — route through dedup_exact, O(B)).
-    buckets = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
-    combos = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda a, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(combos).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
+    # a compute-bound stage must not inherit a byte-sized partition
+    # count — see _ensure_parallelism
+    sig = _signature_frame(_ensure_parallelism(df), text_col, id_col, num_hashes, k, hash_fn)
+    banded = minhash_bands(sig, id_col, num_hashes, bands, hash_fn)
+    return _bucket_pairs(banded, id_col, max_bucket_size)
 
 
 # --- SimHash ----------------------------------------------------------
@@ -302,12 +335,12 @@ def simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash",
     # materialize the word-hash array ONCE behind a projection boundary —
     # every per-bit vote aggregate references it, and an inline expression
     # would re-normalize/split/hash the text `bits` times per row (same
-    # fix as minhash_signature)
+    # fix as minhash_lsh_pairs)
     staged = df.withColumn("__sh_h", h)
     harr = F.col("__sh_h")
     one = F.lit(1).cast("long")
 
-    def vote_fn(mask):  # closure factory — see minhash_signature note
+    def vote_fn(mask):  # closure factory: binds this bit's mask, not the loop's last
         return lambda acc, x: acc + F.when(x.bitwiseAND(mask) != 0, 1).otherwise(-1)
 
     bit_cols = []
@@ -420,17 +453,8 @@ def shared_span_pairs(
     groups = groups.filter(
         (F.size("__ids") >= 2) & (F.size("__ids") <= max_df)
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda a, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
     return (
-        groups.select(F.explode(combos).alias("p"))
+        groups.select(F.explode(_member_pairs()).alias("p"))
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_spans"))
     )
@@ -457,69 +481,85 @@ def connected_components(
     diameter, and near-dup components are by construction tiny, dense
     clusters (diameter 1-3 — a doc cluster where A~B~C but A's label
     must hop through B), so the loop converges in a handful of rounds.
-    Each round is one hash join (edges ⋈ labels) plus one groupBy-min —
-    both keyed shuffles on the id, no broadcast of anything
-    corpus-sized, and the per-round convergence check is a count-only
-    job over the changed rows. Labels are cached per round and
-    unpersisted after the next round materializes (at most two label
-    sets live at once). For adversarial long-chain graphs at extreme
-    scale, swap in the large-star/small-star recipe (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — same output
-    contract; not needed for dedup-shaped graphs.
+    For adversarial long-chain graphs at extreme scale, swap in the
+    large-star/small-star recipe (Kiveris et al., "Connected Components
+    in MapReduce and Beyond") — same output contract; not needed for
+    dedup-shaped graphs.
+
+    Job shape: the symmetric edge set is materialized once (cached by
+    the first action that reads it), and each round is ONE action — a
+    local checkpoint of the new label set, whose groupBy-min carries each
+    node's old label next to its new one, so an ``Observation`` on the
+    same action counts the changed labels. Each round is one join
+    (edges ⋈ labels) plus one groupBy-min keyed on the id; no broadcast
+    of anything corpus-sized. Checkpoints cut the lineage, so a round's
+    plan does not grow with the round count, and each round's labels are
+    released once the next round has them.
 
     Raises after ``max_iter`` rounds without convergence rather than
-    returning partially-propagated labels. The returned frame reads the
-    final cached label set (node-count sized, tiny relative to the
-    corpus); persist it to a table and unpersist for long-lived
-    sessions."""
+    returning partially-propagated labels. The result is the final
+    round's local checkpoint (node-count sized, tiny relative to the
+    corpus): nothing stays in the cache manager, and its blocks go when
+    the returned frame is garbage-collected."""
     edges = pairs.select(
         F.col(id_a).alias("__src"), F.col(id_b).alias("__dst")
     ).union(
         pairs.select(F.col(id_b).alias("__src"), F.col(id_a).alias("__dst"))
-    ).distinct()
-    # initial label: min(self, smallest direct neighbor)
-    labels = edges.groupBy("__src").agg(
-        F.least(F.col("__src"), F.min("__dst")).alias("__lbl")
-    ).cache()
-    for _ in range(max_iter):
-        # each node pulls its neighbors' labels and keeps the min
-        # (labels derives from edges — rename its key first or the
-        # self-join is ambiguous)
-        lbl_by_node = labels.select(
-            F.col("__src").alias("__nbr"), F.col("__lbl")
-        )
-        neighbor_lbls = (
-            edges.join(lbl_by_node, edges["__dst"] == lbl_by_node["__nbr"])
-            .select(F.col("__src").alias("__id"), F.col("__lbl"))
-        )
-        new_labels = (
-            labels.select(F.col("__src").alias("__id"), "__lbl")
-            .union(neighbor_lbls)
-            .groupBy("__id")
-            .agg(F.min("__lbl").alias("__lbl"))
-            .select(F.col("__id").alias("__src"), "__lbl")
-        ).cache()
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("__lbl", "__old"), "__src"
+    ).distinct().cache()
+    try:
+        # initial label: min(self, smallest direct neighbor)
+        labels = edges.groupBy("__src").agg(
+            F.least(F.col("__src"), F.min("__dst")).alias("__lbl")
+        ).localCheckpoint()
+        for _ in range(max_iter):
+            # each node pulls its neighbors' labels and keeps the min; its
+            # own row carries the old label through the same groupBy
+            # (both frames have a __src column — rename the labels' key)
+            lbl_by_node = labels.select(
+                F.col("__src").alias("__nbr"), F.col("__lbl")
             )
-            .filter(F.col("__lbl") != F.col("__old"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(graph diameter exceeds the bound — use a larger max_iter "
-            f"or the large-star/small-star variant)"
-        )
+            neighbor_lbls = (
+                edges.join(lbl_by_node, edges["__dst"] == lbl_by_node["__nbr"])
+                .select(F.col("__src").alias("__id"), "__lbl", F.lit(False).alias("__self"))
+            )
+            changed = Observation()
+            new_labels = (
+                labels.select(F.col("__src").alias("__id"), "__lbl", F.lit(True).alias("__self"))
+                .union(neighbor_lbls)
+                .groupBy("__id")
+                .agg(
+                    F.min("__lbl").alias("__lbl"),
+                    F.min(F.when(F.col("__self"), F.col("__lbl"))).alias("__old"),
+                )
+                .observe(changed, F.count_if(F.col("__lbl") != F.col("__old")).alias("n"))
+                .select(F.col("__id").alias("__src"), "__lbl")
+                .localCheckpoint()
+            )
+            _release(labels)
+            labels = new_labels
+            if changed.get["n"] == 0:
+                break
+        else:
+            _release(labels)
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                f"(graph diameter exceeds the bound — use a larger max_iter "
+                f"or the large-star/small-star variant)"
+            )
+    finally:
+        edges.unpersist()
     return labels.select(
         F.col("__src").alias("id"), F.col("__lbl").alias("group_id")
     )
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop a local checkpoint's blocks now, not at the next JVM GC. The
+    frame must not be read again. ``SparkContext.unpersistRDD`` is what
+    ``RDD.unpersist`` calls, without its warning that a local checkpoint
+    cannot be recomputed afterwards."""
+    rdd_id = checkpointed._jdf.queryExecution().logical().rdd().id()
+    checkpointed.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
 def keep_representatives(
@@ -540,20 +580,10 @@ def keep_representatives(
     return docs.join(losers, id_col, "left_anti")
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double")))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def cosine(a: str, b: str) -> Column:
+    """Cosine of two array SQL expressions (see cosine_sql); pass column
+    names through _ident."""
+    return F.expr(cosine_sql(a, b))
 
 
 def embedding_near_dups(
@@ -570,7 +600,7 @@ def embedding_near_dups(
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     return (
-        pairs.withColumn("cos", F.round(cosine(F.col("__va"), F.col("__vb")), 6))
+        pairs.withColumn("cos", F.round(cosine("__va", "__vb"), 6))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -600,51 +630,18 @@ def embedding_near_dups_lsh(
     r = bits // bands
     planes = _hyperplanes(dim, bits, seed)
     sig = df.select(F.col(id_col), signature_expr(vec_col, planes).alias("__sig"))
-    mask = F.lit((1 << r) - 1)
-    banded = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("__sig"), b * r)
-                        .bitwiseAND(mask)
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    # one groupBy shuffle + in-bucket combination expansion (same
-    # restructure as minhash_lsh_pairs: no bucket self-join, no second
-    # evaluation of the signature pipeline)
-    buckets = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
-    combos = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(combos).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
+    # same group-then-expand as minhash_lsh_pairs: no bucket self-join,
+    # no second evaluation of the signature pipeline
+    banded = _explode_bands(sig, id_col, [
+        f"(shiftrightunsigned(__sig, {b * r}) & {(1 << r) - 1})" for b in range(bands)
+    ])
+    cand = _bucket_pairs(banded, id_col, max_bucket_size)
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn("cos", F.round(cosine(F.col("__va"), F.col("__vb")), 6))
+        .withColumn("cos", F.round(cosine("__va", "__vb"), 6))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )

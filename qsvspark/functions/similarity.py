@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from qsvspark.functions.dedup import cosine
+from qsvspark.functions.dedup import _dlit, _ident, _vec_sql, cosine_sql, dot_sql
 
 
 def _manifest_probe(catalog, table: str, key: str, values: list) -> tuple[dict, list[str]]:
@@ -44,6 +44,13 @@ def _manifest_probe(catalog, table: str, key: str, values: list) -> tuple[dict, 
         os.path.join(data_dir, f"{key}={v}") for v in values if str(v) in counts
     ]
     return m, dirs
+
+
+def _scan_probed(catalog, spark: SparkSession, m: dict, dirs: list[str]) -> DataFrame:
+    """Scan the probed partition directories (siblings under one
+    snapshot's data dir) with the manifest schema — no schema-inference
+    job."""
+    return catalog._scan_files(spark, m, os.path.dirname(dirs[0]), dirs)  # noqa: SLF001
 
 
 def _manifest_empty_df(spark: SparkSession, manifest: dict, cols: list[str]) -> DataFrame:
@@ -65,12 +72,7 @@ def brute_force_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine top-k for one query vector (broadcast as a literal)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        df.select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rerank_topk(df, query_vec, k, vec_col, id_col)
 
 
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
@@ -79,17 +81,16 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
 
 
 def signature_expr(vec_col: str, planes: list[list[float]]) -> Column:
-    """B-bit signature as a long: bit b = 1 iff dot(v, plane_b) > 0."""
-    sig = F.lit(0).cast("long")
+    """B-bit signature as a long: bit b = 1 iff dot(v, plane_b) > 0
+    (one SQL expression; the bits OR together left to right)."""
+    v = _ident(vec_col)
+    sig = "CAST(0 AS BIGINT)"
     for b, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), p, lambda x, y: (x * y).cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        sig = (
+            f"({sig} | CASE WHEN {dot_sql(v, _vec_sql(plane))} > 0"
+            f" THEN shiftleft(CAST(1 AS BIGINT), {b}) ELSE CAST(0 AS BIGINT) END)"
         )
-        sig = sig.bitwiseOR(F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long")))
-    return sig
+    return F.expr(sig)
 
 
 def query_signature(query_vec: list[float], planes: list[list[float]]) -> int:
@@ -107,9 +108,9 @@ def _rerank_topk(
     cand: DataFrame, query_vec: list[float], k: int, vec_col: str, id_col: str
 ) -> DataFrame:
     """Exact-cosine rerank of a candidate set → TakeOrderedAndProject."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    cos = F.expr(f"round({cosine_sql(_ident(vec_col), _vec_sql(query_vec))}, 6)")
     return (
-        cand.select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("cos"))
+        cand.select(F.col(id_col), cos.alias("cos"))
         .orderBy(F.col("cos").desc(), F.col(id_col))
         .limit(k)
     )
@@ -216,12 +217,16 @@ def ivf_assign_expr(vec_col: str, centroids: list[list[float]]) -> Column:
     """0-based nearest-centroid id as a codegen'd expression: argmax over
     the per-centroid cosines, each rounded to 6 decimals so the argmax is
     reproducible across engines (first index wins ties — DuckDB's
-    list_indexof uses the same rule, which the driver oracle relies on)."""
-    sims = F.array(*[
-        F.round(cosine(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c])), 6)
-        for c in centroids
-    ])
-    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
+    list_indexof uses the same rule, which the driver oracle relies on).
+    The centroids are ONE array<array<double>> literal under one
+    transform, so the expression stays the same size for any k."""
+    return F.expr(_ivf_assign_sql(vec_col, centroids))
+
+
+def _ivf_assign_sql(vec_col: str, centroids: list[list[float]]) -> str:
+    cents = "array(" + ", ".join(_vec_sql(c) for c in centroids) + ")"
+    sims = f"transform({cents}, __c -> round({cosine_sql(_ident(vec_col), '__c')}, 6))"
+    return f"CAST(array_position({sims}, array_max({sims})) - 1 AS INT)"
 
 
 def probed_centroids(
@@ -256,6 +261,31 @@ def ivf_topk(
     probe = probed_centroids(query_vec, centroids, nprobe)
     cand = df.filter(ivf_assign_expr(vec_col, centroids).isin(*probe))
     return _rerank_topk(cand, query_vec, k, vec_col, id_col)
+
+
+def round6_half_up(x):
+    """Spark's ``round(x, 6)`` on a float64 numpy array: HALF_UP (ties
+    away from zero) on the shortest decimal form of each double, which is
+    also DuckDB's rule — ``np.round`` rounds ties to even. For |x| < 1000
+    (cosines lie in [-1, 1]) floor(|x|·1e6 + 0.5) / 1e6 is exact away
+    from a tie: the product errs by less than 1e-6, and the division is
+    correctly rounded. Values within 1e-6 of a tie are decided on their
+    repr, as Spark does."""
+    import numpy as np
+
+    x = np.asarray(x, dtype=np.float64)
+    s = np.abs(x) * 1e6
+    n = np.floor(s + 0.5)
+    near = np.abs(s - np.floor(s) - 0.5) < 1e-6
+    if near.any():
+        from decimal import ROUND_HALF_UP, Decimal
+
+        n[near] = [
+            float(Decimal(repr(float(v))).scaleb(6).quantize(Decimal(1), ROUND_HALF_UP))
+            for v in np.abs(x[near])
+        ]
+    # + 0.0 turns -0.0 into 0.0, as Spark's BigDecimal round does
+    return np.copysign(n / 1e6, x) + 0.0
 
 
 def semantic_dedup(
@@ -294,18 +324,18 @@ def semantic_dedup(
       expression reproducible in any SQL engine.
     * ``"blas"`` — Arrow-batched applyInPandas per cluster: numpy
       normalizes the cluster block and takes one X·Xᵀ matmul, then
-      drops any row with a lower-id mate at round-6 ≥ threshold.
+      drops any row with a lower-id mate at round-6 ≥ threshold (HALF_UP,
+      Spark's rounding rule — see round6_half_up).
       Identical verdicts (pytest-pinned against expr), measured 6×
       faster at sf0.1; this is the 100-TB path — per-pair cost
       collapses into BLAS and the shuffle moves each vector exactly
       once (the join path moves both sides and folds a 64-element
       zip_with per pair).
     """
-    assigned = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        ivf_assign_expr(vec_col, centroids).alias("cluster"),
-    )
+    # SQL-text projections throughout: a Column-API projection costs ~20
+    # gateway round trips per column, a selectExpr a few per projection
+    i, v = _ident(id_col), _ident(vec_col)
+    assigned = df.selectExpr(i, v, f"{_ivf_assign_sql(vec_col, centroids)} AS cluster")
     if method == "blas":
         import pandas as pd  # noqa: F401 — applyInPandas contract
 
@@ -319,7 +349,7 @@ def semantic_dedup(
             norms = np.linalg.norm(x, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             xn = x / norms
-            sims = np.round(xn @ xn.T, 6)
+            sims = round6_half_up(xn @ xn.T)
             # strictly-lower-triangular: sims[i, j<i] is against a
             # lower-id mate (ids are sorted above)
             tri = np.tril(sims >= thr, k=-1)
@@ -331,29 +361,20 @@ def semantic_dedup(
             _dedup_cluster,
             schema=f"{id_col} {id_type}, cluster int, kept boolean",
         )
-    a = assigned.select(
-        "cluster", F.col(id_col).alias("__ida"), F.col(vec_col).alias("__va")
-    )
-    b = assigned.select(
-        "cluster", F.col(id_col).alias("__idb"), F.col(vec_col).alias("__vb")
-    )
+    a = assigned.selectExpr("cluster", f"{i} AS __ida", f"{v} AS __va")
+    b = assigned.selectExpr("cluster", f"{i} AS __idb", f"{v} AS __vb")
     dropped = (
         a.join(b, "cluster")
-        .filter(F.col("__ida") < F.col("__idb"))
-        .filter(F.round(cosine(F.col("__va"), F.col("__vb")), 6) >= threshold)
-        .select(F.col("__idb").alias(id_col))
+        .where(
+            f"__ida < __idb AND round({cosine_sql('__va', '__vb')}, 6)"
+            f" >= {_dlit(threshold)}"
+        )
+        .selectExpr(f"__idb AS {i}")
         .distinct()
     )
-    return (
-        assigned.join(
-            dropped.withColumn("__dropped", F.lit(True)), id_col, "left"
-        )
-        .select(
-            F.col(id_col),
-            "cluster",
-            F.coalesce(~F.col("__dropped"), F.lit(True)).alias("kept"),
-        )
-    )
+    return assigned.join(
+        dropped.selectExpr(i, "true AS __dropped"), id_col, "left"
+    ).selectExpr(i, "cluster", "coalesce(NOT __dropped, true) AS kept")
 
 
 class IvfIndex:
@@ -424,7 +445,7 @@ class IvfIndex:
                 _manifest_empty_df(spark, m, [id_col, vec_col]),
                 query_vec, k, vec_col, id_col,
             )
-        cand = spark.read.parquet(*dirs)
+        cand = _scan_probed(self.catalog, spark, m, dirs)
         return _rerank_topk(cand, query_vec, k, vec_col, id_col)
 
 
@@ -537,7 +558,7 @@ class AnnIndex:
                 _manifest_empty_df(spark, m, [id_col, vec_col]),
                 query_vec, k, vec_col, id_col,
             )
-        cand = spark.read.parquet(*dirs).filter(
+        cand = _scan_probed(self.catalog, spark, m, dirs).filter(
             F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig).cast("long"))) <= probe_hamming
         )
         return _rerank_topk(cand, query_vec, k, vec_col, id_col)

@@ -99,9 +99,10 @@ def dedup_stream_minhash(
     family) with cross-micro-batch state — the 100-TB streaming plan the
     module docstring promises.
 
-    Per micro-batch, each row gets the same staged signature pipeline as
-    batch (normalized text → one xxhash64 per shingle → affine lanes →
-    band buckets), then state keyed on (band, bucket) holds the member
+    Per micro-batch, each row gets the batch signature pipeline and band
+    buckets — the same helpers, so the bucket format lives in one module
+    (normalized text → one xxhash64 per shingle → affine lanes → band
+    buckets), then state keyed on (band, bucket) holds the member
     ids seen so far: a new arrival emits one (id_a, id_b) candidate per
     existing member (id_a < id_b) and joins the bucket. Over any arrival
     order, the union of emitted pairs equals the batch candidate set on
@@ -119,37 +120,10 @@ def dedup_stream_minhash(
         entirely at the end; a stream cannot retract, so it truncates);
       - ``ttl_minutes`` expires idle buckets, bounding unbounded streams.
     """
-    from qsvspark.functions.dedup import (
-        _MH_PRIME, _norm_text, _shingle_seq, minhash_signature_affine,
-    )
+    from qsvspark.functions.dedup import _signature_frame, minhash_bands
 
-    rows_per_band = num_hashes // bands
-    staged = df.select(F.col(id_col), _norm_text(text_col).alias("__t")).select(
-        F.col(id_col),
-        F.transform(
-            _shingle_seq(F.col("__t"), k),
-            lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)),
-        ).alias("__hs"),
-    ).select(
-        F.col(id_col),
-        minhash_signature_affine(F.col("__hs"), num_hashes).alias("__sig"),
-    )
-
-    def band_bucket(b: int):
-        vals = [F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        return F.xxhash64(*vals).cast("string")
-
-    banded = staged.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    sig = _signature_frame(df, text_col, id_col, num_hashes, k, "xxhash64")
+    banded = minhash_bands(sig, id_col, num_hashes, bands)
 
     id_type = dict(df.dtypes)[id_col]
 

@@ -17,6 +17,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
+def sf_dir():
+    """The sf0.001 test tables (one parquet dataset per table)."""
+    return SF_DIR
+
+
+@pytest.fixture(scope="session")
 def spark():
     sp = get_spark("qsvspark-tests", parallelism=4, shuffle_partitions=4)
     yield sp

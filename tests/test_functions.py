@@ -99,7 +99,7 @@ class TestDedup:
                 "doc_id", shingle_hashes("text", k).alias("__hs")
             ).select(
                 "doc_id",
-                minhash_signature_affine(F.col("__hs"), num_hashes).alias("sig"),
+                minhash_signature_affine("__hs", num_hashes).alias("sig"),
             ).collect()
         }
         expected = set()
@@ -262,6 +262,32 @@ class TestIndexManifestProbing:
                       ivf.query(spark, qv, k=5, nprobe=2).collect()]
         assert ivf_probed == adhoc
 
+    def test_query_frames_start_no_spark_job(self, spark, sf_dir, tmp_path):
+        """The probed directories are scanned with the manifest schema, so
+        building (and planning) a query frame starts no schema-inference
+        job. Both probes stay under Spark's 32-path parallel-listing
+        threshold, above which file listing itself runs as a job."""
+        from qsvspark.functions import IvfIndex
+
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        ann = AnnIndex(str(tmp_path / "ann"), bits=12, prefix_bits=6, seed=42)
+        ann.build(emb, dim=64)
+        ivf = IvfIndex(str(tmp_path / "ivf"))
+        ivf.build(emb, n_centroids=8, sample_n=128)
+        qv = list(emb.filter("vec_id = 3").collect()[0]["embedding"])
+        sc = spark.sparkContext
+        group = "index-query-no-jobs"
+        sc.setJobGroup(group, "AnnIndex.query + IvfIndex.query")
+        try:
+            frames = [ann.query(spark, qv, k=5, probe_hamming=2),
+                      ivf.query(spark, qv, k=5, nprobe=2)]
+            for df in frames:
+                df._jdf.queryExecution().sparkPlan()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert all(len(df.collect()) == 5 for df in frames)
+
     def test_empty_probe_keeps_build_schema(self, spark, tmp_path):
         """String doc ids: an empty-probe result must carry the SAME
         schema as a non-empty one (captured at build time via the
@@ -278,6 +304,98 @@ class TestIndexManifestProbing:
         assert miss.collect() == []
         assert miss.schema == hit.schema
         assert hit.unionByName(miss).count() == 3
+
+
+class TestWideExpressionParity:
+    """Values of the one-SQL-expression builders, pinned against
+    references that do not share their code: a precomputed IVF
+    assignment, the DuckDB replica of the md5_60 lanes and the driver's
+    query_signature."""
+
+    def test_ivf_assignment_matches_fixture(self, spark, sf_dir):
+        import json
+        import os
+
+        from qsvspark.functions import train_ivf_centroids
+        from qsvspark.functions.similarity import ivf_assign_expr
+
+        with open(os.path.join(os.path.dirname(__file__), "fixtures",
+                               "ivf_assign_sf0001.json")) as f:
+            want = json.load(f)["clusters_by_vec_id"]
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        cents = train_ivf_centroids(emb, n_centroids=8, sample_n=128)
+        got = [r["c"] for r in emb.select(
+            "vec_id", ivf_assign_expr("embedding", cents).alias("c")
+        ).orderBy("vec_id").collect()]
+        assert got == want
+
+    def test_ivf_assignment_first_index_wins_ties(self, spark):
+        from qsvspark.functions.similarity import ivf_assign_expr
+
+        df = spark.createDataFrame(
+            [(0, [1.0, 1.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],
+            "vec_id long, embedding array<float>",
+        )
+        # an exact tie, a duplicated centroid, and a tie that exists only
+        # after round-6 (centroid 0 is 1e-10 farther from [1, 0] than
+        # centroid 1, both round to 1.0): the first index wins each time
+        for cents, want in (
+            ([[1.0, 0.0], [0.0, 1.0]], [0, 0, 1]),
+            ([[0.0, 1.0], [1.0, 0.0], [1.0, 0.0]], [0, 1, 0]),
+            ([[0.9999999999, 1e-05], [1.0, 0.0]], [0, 0, 0]),
+        ):
+            got = [r["c"] for r in df.select(
+                "vec_id", ivf_assign_expr("embedding", cents).alias("c")
+            ).orderBy("vec_id").collect()]
+            assert got == want, cents
+
+    def test_md5_signatures_match_duckdb(self, spark, docs):
+        import duckdb
+        import pyarrow as pa
+
+        import __spark_entry__ as e
+        from qsvspark.functions.dedup import _signature_frame
+
+        num_hashes, k = 16, 5
+        got = {
+            r["doc_id"]: list(r["__sig"])
+            for r in _signature_frame(
+                docs, "text", "doc_id", num_hashes, k, "md5_60"
+            ).collect()
+        }
+        lanes = ", ".join(
+            "list_min(list_transform(sh, s -> " + e._h60(f"s || '|{j}'") + "))"
+            for j in range(num_hashes)
+        )
+        con = duckdb.connect()
+        con.register("documents", pa.Table.from_pylist(
+            [{"doc_id": i, "text": t} for i, t in DOCS]
+        ))
+        want = {
+            r[0]: list(r[1])
+            for r in con.execute(
+                f"WITH n AS (SELECT doc_id, {e._NORM} AS t FROM documents),"
+                " s AS (SELECT doc_id, list_distinct(list_transform("
+                f" range(1, greatest(length(t) - {k - 1}, 1) + 1),"
+                f" i -> substr(t, i, {k}))) AS sh FROM n)"
+                f" SELECT doc_id, [{lanes}] FROM s"
+            ).fetchall()
+        }
+        assert got == want and len(got) == len(DOCS)
+
+    def test_signature_bits_match_query_signature(self, spark, sf_dir):
+        from qsvspark.functions.similarity import (
+            _hyperplanes, query_signature, signature_expr,
+        )
+
+        planes = _hyperplanes(64, 16, 42)
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        rows = emb.select(
+            "embedding", signature_expr("embedding", planes).alias("sig")
+        ).collect()
+        assert len(rows) == emb.count()
+        for r in rows:
+            assert r["sig"] == query_signature(list(r["embedding"]), planes)
 
 
 class TestMultimodal:
@@ -494,6 +612,24 @@ class TestConnectedComponents:
         # component {0,1,4} keeps 0; unpaired 2,3,5 pass through
         assert kept == [0, 2, 3, 5]
 
+    def test_keep_representatives_leaves_no_cached_frame(self, spark):
+        from qsvspark.functions import keep_representatives
+
+        # start from an empty cache manager (other tests cache fixtures)
+        spark.catalog.clearCache()
+        docs = spark.createDataFrame(
+            [(i, f"doc {i}") for i in range(6)], ["doc_id", "text"]
+        )
+        pairs = spark.createDataFrame([(0, 1), (1, 4)], ["id_a", "id_b"])
+        assert len(keep_representatives(docs, pairs).collect()) == 4
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def test_empty_pairs(self, spark):
+        from qsvspark.functions import connected_components
+
+        pairs = spark.createDataFrame([], "id_a long, id_b long")
+        assert connected_components(pairs).collect() == []
+
 
 class TestLineDups:
     def test_signals(self, spark):
@@ -660,3 +796,24 @@ class TestSemanticDedup:
         same = semantic_dedup(df, [[1.0, 0.0], [0.0, 1.0]], threshold=0.99)
         kept = {r["vec_id"]: r["kept"] for r in same.collect()}
         assert kept == {0: True, 1: False}
+
+    def test_blas_rounding_is_spark_half_up(self, spark):
+        """The BLAS kernel's round-6 must be Spark's round (HALF_UP on the
+        decimal form), not numpy's round-half-even, or a cosine on a
+        6th-decimal tie flips the verdict between the two methods."""
+        import random
+
+        import numpy as np
+
+        from qsvspark.functions.similarity import round6_half_up
+
+        rng = random.Random(5)
+        vals = [0.0000005, -0.0000005, 0.9500005, 0.9499995, 0.1234565,
+                -0.7071065, 0.30000000000000004, 1.0, -1.0, 0.0]
+        vals += [float(f"{rng.randrange(-10**6, 10**6) / 1e6:.6f}5") for _ in range(200)]
+        want = [
+            r[0] for r in spark.createDataFrame([(v,) for v in vals], "x double")
+            .select(F.round("x", 6)).collect()
+        ]
+        assert round6_half_up(np.array(vals)).tolist() == want
+        assert np.round(np.array(vals), 6).tolist() != want  # half-even differs

@@ -153,6 +153,59 @@ class TestSingleEvaluation:
         assert "Join" not in plan
 
 
+def gateway_calls(monkeypatch, build):
+    """(result, driver→JVM gateway calls) of building a plan, counted on
+    the calling thread only: py4j's finalizer thread sends the release
+    calls of garbage-collected objects, whenever it gets to them."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    calls = 0
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    out = build()
+    return out, calls
+
+
+class TestPlanBuildCost:
+    """Building an operator's plan is driver work before any job runs.
+    Wide builders (80 minhash lanes, 40 bands, 16 centroid cosines) are
+    one SQL expression each; built term by term through the Column API
+    they cost one gateway round trip per literal, lambda and operator —
+    10k+ calls and over a second of driver time per build."""
+
+    def test_minhash_lsh_build_budget(self, spark, monkeypatch):
+        from qsvspark.functions import minhash_lsh_pairs
+
+        docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+        df, calls = gateway_calls(monkeypatch, lambda: minhash_lsh_pairs(
+            docs, num_hashes=80, bands=40, k=5))
+        assert calls <= 1_000, calls
+        assert df.columns == ["id_a", "id_b"]
+
+    @pytest.mark.parametrize("method", ["blas", "expr"])
+    def test_semantic_dedup_build_budget(self, spark, monkeypatch, method):
+        import random
+
+        from qsvspark.functions import semantic_dedup
+
+        rng = random.Random(3)
+        cents = [[round(rng.gauss(0, 1), 6) for _ in range(64)] for _ in range(16)]
+        emb = spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
+        df, calls = gateway_calls(monkeypatch, lambda: semantic_dedup(
+            emb, cents, 0.95, method=method))
+        assert calls <= 300, calls
+        assert df.columns == ["vec_id", "cluster", "kept"]
+
+
 class TestPipelineDedupPlan:
     def test_dedup_keep_first_has_map_side_group_limit(self, spark):
         """The keep-first window (row_number == 1) must compile to a
